@@ -8,7 +8,7 @@ window function: deterministic, distributed, no driver materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 MAX_FILES_PER_MANIFEST = 10  # dev default; 100 in prod (terraform vars)
@@ -20,7 +20,7 @@ def assign_batches(
     batch_size: int = MAX_FILES_PER_MANIFEST,
     date_col: str = "date_prefix",
     order_col: str = "file_path",
-    allow_partial: bool = False,
+    allow_partial: bool | Column = False,
     min_partial: int = MIN_FILES_FOR_PARTIAL_BATCH,
 ) -> DataFrame:
     """Assign `batch_id` per date; filter incomplete trailing batches.
@@ -30,15 +30,20 @@ def assign_batches(
     reference iterated DynamoDB query order).  With ``allow_partial=False``
     only full batches survive (builder.py:1055-1062); the orphan-flush path
     passes ``allow_partial=True`` with threshold ``min_partial``
-    (builder.py:737-746).
+    (builder.py:737-746).  ``allow_partial`` may also be a boolean Column
+    over ``date_col``, deciding per date, so one pass batches today's full
+    batches and flushes stale dates' partial ones.
+
+    Both windows partition by date, so the batch sizes come out of the
+    same shuffle as the numbering.
     """
     w = Window.partitionBy(date_col).orderBy(order_col)
     batched = files.withColumn(
         "batch_id", F.floor((F.row_number().over(w) - 1) / batch_size)
     )
-    counts = batched.groupBy(date_col, "batch_id").agg(
-        F.count("*").alias("_batch_n")
+    batched = batched.withColumn(
+        "_batch_n", F.count(F.lit(1)).over(Window.partitionBy(date_col, "batch_id"))
     )
-    batched = batched.join(counts, on=[date_col, "batch_id"], how="inner")
-    threshold = min_partial if allow_partial else batch_size
+    partial = allow_partial if isinstance(allow_partial, Column) else F.lit(allow_partial)
+    threshold = F.when(partial, min_partial).otherwise(batch_size)
     return batched.filter(F.col("_batch_n") >= threshold).drop("_batch_n")

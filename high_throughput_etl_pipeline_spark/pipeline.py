@@ -10,6 +10,15 @@ single driver loop over DataFrame operations:
     claim (CAS) → transform+write per manifest (with retry) →
     status flip → execution report
 
+Commit point: the file-state table (state/tracker.py) is the only thing
+a run writes per state transition.  The claim that stamps a manifest's
+path on its files is the manifest's creation, and the flip of those files
+is its status change; ``manifest_store`` is a view derived from those
+rows, not a second table (the reference's ``MANIFEST#`` rows likewise live
+in the file-state table).  Manifest paths carry a per-run stamp, so two
+runs on one date never share one.  Invalid files are quarantined once per
+``file_path``, and run reports are single JSON files written driver-side.
+
 Failure path (ST7): a manifest that exhausts MAX_RETRIES flips to
 ``failed`` AND lands in a dead-letter directory as a JSON document (the
 reference's 3-receive SQS DLQ, terraform/modules/sqs/main.tf:27-66);
@@ -46,8 +55,14 @@ from high_throughput_etl_pipeline_spark.state.lock import DriverLock
 from high_throughput_etl_pipeline_spark.state.manifest import (
     ManifestStore,
     build_manifest_docs,
+    manifest_path_col,
+    new_run_stamp,
 )
-from high_throughput_etl_pipeline_spark.state.tracker import FileStateTracker
+from high_throughput_etl_pipeline_spark.state.tracker import (
+    FileStateTracker,
+    checkpoint_counting,
+    has_data,
+)
 
 MAX_RETRIES = 2  # SFN: Lambda 2 retries, backoff 2.0 (step_functions/main.tf)
 BACKOFF_SECONDS = 1.0
@@ -150,7 +165,7 @@ class PipelineRunner:
     ):
         self.spark = spark
         self.tracker = FileStateTracker(spark, state_path, ttl_days=ttl_days)
-        self.manifest_store = ManifestStore(spark, state_path + "_manifests")
+        self.manifest_store = ManifestStore(self.tracker)
         self.output_dir = output_dir
         self.quarantine_dir = quarantine_dir
         self.batch_size = batch_size
@@ -187,13 +202,16 @@ class PipelineRunner:
         schema,
     ) -> RunResult:
         res = RunResult()
-        res.files_seen = file_listing.count()
-
-        validated = validate_files(file_listing)
-        bad = quarantine(validated)
-        res.files_quarantined = bad.count()
+        # the listing feeds the counts, the quarantine and the tracker:
+        # validate it once, counting seen and invalid files on the way
+        validated, counts = checkpoint_counting(
+            validate_files(file_listing),
+            seen=F.count(F.lit(1)),
+            invalid=F.count(F.when(~F.col("is_valid"), 1)),
+        )
+        res.files_seen, res.files_quarantined = counts["seen"], counts["invalid"]
         if self.quarantine_dir and res.files_quarantined:
-            bad.write.mode("append").parquet(self.quarantine_dir)
+            self._quarantine(quarantine(validated))
 
         res.files_tracked = self.tracker.track_files(valid_files(validated))
 
@@ -206,40 +224,50 @@ class PipelineRunner:
             today = self.spark.sql(
                 "SELECT date_format(current_date(), 'yyyy-MM-dd')"
             ).collect()[0][0]
-        current = assign_batches(
-            pending.filter(F.col("date_prefix") >= today),
+        stale = F.col("date_prefix") < today
+        batched = assign_batches(
+            pending if flush_orphans else pending.filter(~stale),
             batch_size=self.batch_size,
-            allow_partial=False,
+            allow_partial=stale,
         )
-        parts = [current]
-        if flush_orphans:
-            parts.append(
-                assign_batches(
-                    pending.filter(F.col("date_prefix") < today),
-                    batch_size=self.batch_size,
-                    allow_partial=True,
-                )
-            )
-        batched = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        # one-pass manifest docs: materialize once, then reuse for the
-        # driver-side loop, the meta-record table, AND the claim join
-        docs = build_manifest_docs(batched).localCheckpoint(eager=True)
-        manifests = docs.collect()
+        # materialize the batching once: the manifest docs and the claims
+        # both read it, and its windows must not run twice
+        batched = batched.localCheckpoint(eager=True)
+        stamp = new_run_stamp()
+        manifests = sorted(
+            build_manifest_docs(batched, run_stamp=stamp).collect(),
+            key=lambda m: (m["date_prefix"], m["batch_id"]),
+        )
         res.manifests_created = len(manifests)
         if not manifests:
             return res
-        self.manifest_store.record(docs)
 
-        claims = batched.select("date_prefix", "batch_id", "file_key").join(
-            docs.select("date_prefix", "batch_id", "manifest_path"),
-            on=["date_prefix", "batch_id"],
-        ).select("date_prefix", "file_key", "manifest_path")
-        self.tracker.claim_files(claims)
+        # the claim records the manifests: no meta-record write of its own
+        claims = batched.select(
+            "date_prefix", "file_key", manifest_path_col(stamp).alias("manifest_path")
+        )
+        self.tracker.claim_files(
+            claims, dates=sorted({m["date_prefix"] for m in manifests})
+        )
 
         for m in manifests:
             self._drive_manifest(m, res, schema)
         res.breaker_tripped = not self.breaker.allow()
         return res
+
+    def _quarantine(self, bad: DataFrame) -> None:
+        """Append the invalid files not quarantined yet.  Keyed on
+        ``file_path`` like ``track_files``' idempotent insert, so a
+        redelivered listing adds no duplicate rows (and, written only when
+        there is a row, no empty file either)."""
+        if has_data(self.quarantine_dir):
+            seen = self.spark.read.schema("file_path STRING").parquet(
+                self.quarantine_dir
+            )
+            bad = bad.join(seen, on="file_path", how="left_anti")
+        fresh, counted = checkpoint_counting(bad, rows=F.count(F.lit(1)))
+        if counted["rows"]:
+            fresh.write.mode("append").parquet(self.quarantine_dir)
 
     def _drive_manifest(self, m, res: RunResult, schema) -> None:
         """Process one manifest through retry/flip/DLQ/report, guarded by
@@ -256,12 +284,12 @@ class PipelineRunner:
         if ok is not None:
             res.records_written += ok
             res.manifests_succeeded += 1
-            self._flip(m["manifest_path"], "completed")
+            self._flip(m, "completed")
             self.breaker.record_success()
         else:
             res.manifests_failed += 1
             res.errors.append(err or "unknown")
-            self._flip(m["manifest_path"], "failed", (err or "")[:1000])
+            self._flip(m, "failed", (err or "")[:1000])
             self._write_dlq_entry(m, err)
             self.breaker.record_failure()
         if self.reports_dir:
@@ -270,27 +298,27 @@ class PipelineRunner:
     def resume_pending_manifests(self, schema=None) -> RunResult:
         """Drive manifests the tripped breaker left parked (store status
         still ``created``).  Call after ``breaker.reset()`` — with the
-        breaker still open this is a no-op (everything skips again)."""
+        breaker still open this is a no-op (everything skips again).
+        The parked set is a scan of the state table's claimed rows."""
         with self.lock.hold():
             res = RunResult()
-            parked = (
+            parked = sorted(
                 self.manifest_store.manifests()
                 .filter(F.col("status") == "created")
-                .orderBy("date_prefix", "batch_id")
-                .collect()
+                .collect(),
+                key=lambda m: (m["date_prefix"], m["batch_id"]),
             )
             for m in parked:
                 self._drive_manifest(m, res, schema)
             res.breaker_tripped = not self.breaker.allow()
             return res
 
-    def _flip(
-        self, manifest_path: str, status: str, error: str | None = None
-    ) -> None:
+    def _flip(self, m, status: str, error: str | None = None) -> None:
+        """The manifest's one commit: flip its files in the state table."""
         self.tracker.update_status_for_manifest(
-            manifest_path, status, error_message=error
+            m["manifest_path"], status, error_message=error,
+            date_prefix=m["date_prefix"],
         )
-        self.manifest_store.update_status(manifest_path, status, error)
 
     # -- dead-letter queue (ST7) ---------------------------------------
 
@@ -341,26 +369,19 @@ class PipelineRunner:
             if ok is not None:
                 res.records_written += ok
                 res.manifests_succeeded += 1
-                self._flip(doc["manifest_path"], "completed")
+                self._flip(doc, "completed")
                 os.remove(doc["_dlq_file"])
             else:
                 res.manifests_failed += 1
                 res.errors.append(err or "unknown")
-                self._flip(doc["manifest_path"], "failed", (err or "")[:1000])
+                self._flip(doc, "failed", (err or "")[:1000])
             if self.reports_dir:
-                m = {
-                    "manifest_path": doc["manifest_path"],
-                    "date_prefix": doc["date_prefix"],
-                    "file_paths": doc["file_paths"],
-                }
-                self._write_run_report(m, ok, err, started)
+                self._write_run_report(doc, ok, err, started)
         return res
 
     def _write_run_report(self, m, ok, err, started: float) -> None:
         """§3.1 step 7 — per-manifest execution report (glue_batch_job.py
         :218-299), queryable via register_report_views + plans/analytics."""
-        from datetime import datetime, timezone
-
         from high_throughput_etl_pipeline_spark.sources.reports import (
             build_run_report,
             write_report,
@@ -369,7 +390,6 @@ class PipelineRunner:
         ended = time.time()
         iso = lambda t: datetime.fromtimestamp(t, tz=timezone.utc).isoformat()
         report = build_run_report(
-            self.spark,
             manifest_path=m["manifest_path"],
             records_processed=ok or 0,
             parquet_files_created=0,

@@ -3,14 +3,18 @@
 The reference declares Athena external tables over JSON execution reports
 (Athena.sql:43-110) written by the Lambda (lambda_manifest_builder.py:254-359)
 and the Glue job (glue_batch_job.py:218-299).  Here the same nested DDL
-becomes explicit Spark schemas + temp views; report WRITES are single-row
-DataFrames appended as JSON.
+becomes explicit Spark schemas + temp views.  A report is a dict, written
+driver-side as one JSON file, as the Glue job writes each report as one S3
+object: a one-row report is no reason to launch a Spark job.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Athena.sql:43-78 (lambda_execution_reports) re-expressed as Spark DDL.
 LAMBDA_REPORT_SCHEMA = """
@@ -72,13 +76,21 @@ def register_report_views(
         glue_df.createOrReplaceTempView("glue_reports")
 
 
-def write_report(df: DataFrame, path: str) -> None:
-    """S6 — append a (single-row) execution report as JSON."""
-    df.write.mode("append").json(path)
+def write_report(report: dict, path: str) -> None:
+    """S6 — write one execution report as a one-line JSON file in ``path``.
+
+    Atomic: the doc goes to a ``.``-prefixed name, which Spark's file
+    listing skips, and is renamed into place, so a reader of the directory
+    never sees a partial report."""
+    os.makedirs(path, exist_ok=True)
+    name = f"report-{uuid.uuid4().hex}.json"
+    tmp = os.path.join(path, f".{name}")
+    with open(tmp, "w") as f:
+        f.write(json.dumps(report) + "\n")
+    os.replace(tmp, os.path.join(path, name))
 
 
 def build_run_report(
-    spark: SparkSession,
     manifest_path: str,
     records_processed: int,
     parquet_files_created: int,
@@ -87,18 +99,19 @@ def build_run_report(
     ended_at: str,
     duration_seconds: float,
     environment: str = "dev",
-) -> DataFrame:
-    """Build a glue-style run report row (glue_batch_job.py:253-276 parity)."""
+) -> dict:
+    """Build a glue-style run report (glue_batch_job.py:253-276 parity),
+    shaped as ``GLUE_REPORT_SCHEMA``."""
     status = (
         "success"
         if not errors
         else ("partial_success" if records_processed > 0 else "failed")
     )
-    row = {
-        "report_id": None,  # filled with uuid below (engine-side, not driver)
+    return {
+        "report_id": uuid.uuid4().hex[:8],
         "job_info": {
             "job_name": "high-throughput-etl-pipeline-spark",
-            "job_run_id": None,
+            "job_run_id": str(uuid.uuid4()),
             "start_time": started_at,
             "end_time": ended_at,
             "duration_seconds": float(duration_seconds),
@@ -119,7 +132,3 @@ def build_run_report(
             "environment": environment,
         },
     }
-    df = spark.createDataFrame([row], schema=GLUE_REPORT_SCHEMA)
-    return df.withColumn("report_id", F.expr("substring(uuid(), 1, 8)")).withColumn(
-        "job_info", F.col("job_info").withField("job_run_id", F.expr("uuid()"))
-    )

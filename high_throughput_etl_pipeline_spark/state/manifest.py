@@ -1,30 +1,60 @@
-"""Manifest construction (SURVEY.md §3.1 step 4).
+"""Manifest construction (SURVEY.md §3.1 step 4) and the manifest view.
 
 The reference writes manifest JSON docs
 ``{"fileLocations": [{"URIPrefixes": [...]}]}`` at
 ``manifests/{date}/batch-{idx:04d}-{stamp}.json``
 (lambda_manifest_builder.py:1073-1115).  Here a manifest is just the
-grouped output of :func:`assign_batches` — we keep the document shape for
-interop but the engine passes the grouped DataFrame straight to the
-processor (no JSON round-trip needed in-process).
+grouped output of :func:`assign_batches` — the engine passes the grouped
+DataFrame straight to the processor (no JSON round-trip needed
+in-process).  Batch ids restart at 0 on every run, so the per-run stamp
+is what keeps two runs on one date from sharing a manifest path.
+
+Manifests have no table of their own: the file-state table
+(state/tracker.py) is the single commit point, and
+:class:`ManifestStore` derives the manifest meta-records from the files
+a manifest claimed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import uuid
+from datetime import datetime, timezone
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from high_throughput_etl_pipeline_spark.functions.scalar import split_status
+from high_throughput_etl_pipeline_spark.state.tracker import FileStateTracker
 
-def build_manifest_docs(
-    batched_files: DataFrame,
-    manifest_prefix: str = "manifests",
-    run_stamp: str = "run",
-) -> DataFrame:
+MANIFEST_PREFIX = "manifests"
+
+
+def new_run_stamp() -> str:
+    """A manifest-name stamp unique to one run: the UTC second plus a
+    short uuid (the reference's ``batch-{idx:04d}-{stamp}.json``)."""
+    now = datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S")
+    return f"{now}-{uuid.uuid4().hex[:6]}"
+
+
+def manifest_path_col(run_stamp: str) -> Column:
+    """``manifests/{date_prefix}/batch-{batch_id:04d}-{run_stamp}.json``.
+    The date segment is what prunes a status flip to one partition."""
+    return F.format_string(
+        f"{MANIFEST_PREFIX}/%s/batch-%04d-{run_stamp}.json",
+        F.col("date_prefix"),
+        F.col("batch_id"),
+    )
+
+
+def build_manifest_docs(batched_files: DataFrame, run_stamp: str) -> DataFrame:
     """Batches → one row per manifest: (date_prefix, batch_id,
     manifest_path, file_paths array, file_count).
 
     The grouping is a map-side-combinable collect_list per (date, batch) —
     batch cardinality is file_count/batch_size, tiny relative to data.
+    ``run_stamp`` comes from :func:`new_run_stamp`, once per run; the
+    files' claims name their manifest with the same stamp
+    (:func:`manifest_path_col`).
     """
     return (
         batched_files.groupBy("date_prefix", "batch_id")
@@ -32,20 +62,8 @@ def build_manifest_docs(
             F.sort_array(F.collect_list("file_path")).alias("file_paths"),
             F.count("*").alias("file_count"),
         )
-        .withColumn(
-            "manifest_path",
-            F.format_string(
-                f"{manifest_prefix}/%s/batch-%04d-{run_stamp}.json",
-                F.col("date_prefix"),
-                F.col("batch_id"),
-            ),
-        )
+        .withColumn("manifest_path", manifest_path_col(run_stamp))
     )
-
-
-def manifest_doc(file_paths: list[str]) -> dict:
-    """The reference-compatible JSON document for one manifest."""
-    return {"fileLocations": [{"URIPrefixes": list(file_paths)}]}
 
 
 MANIFEST_SCHEMA = (
@@ -56,100 +74,71 @@ MANIFEST_SCHEMA = (
 
 
 class ManifestStore:
-    """Queryable manifest meta-record table (SURVEY.md §1.1 'separate
-    manifests state DataFrame'; the reference keeps ``MANIFEST#`` meta rows
-    beside the file rows, DEVELOPER_GUIDE.md:154-163,
-    lambda_manifest_builder.py:1218-1229).
+    """Queryable manifest meta-records (SURVEY.md §1.1; the reference
+    keeps ``MANIFEST#`` meta rows beside the file rows,
+    DEVELOPER_GUIDE.md:154-163, lambda_manifest_builder.py:1218-1229).
 
-    Same single-driver parquet conventions as FileStateTracker: date-
-    partitioned, dynamic partition overwrite, idempotent insert keyed by
-    ``manifest_path``."""
+    A view over the file-state table, not a second table: every write of
+    a manifest's state is the tracker's write of its files' state, so the
+    two can never disagree and a crash between two writes cannot leave a
+    finished manifest looking parked."""
 
-    def __init__(self, spark, path: str):
-        import os as _os
-
-        self.spark = spark
-        self.path = path
-        self._os = _os
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def _exists(self) -> bool:
-        return self._os.path.isdir(self.path) and any(
-            not n.startswith((".", "_")) for n in self._os.listdir(self.path)
-        )
+    def __init__(self, tracker: FileStateTracker):
+        self.tracker = tracker
 
     def manifests(self) -> DataFrame:
-        if not self._exists():
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
-        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
+        """One row per batch manifest, in ``MANIFEST_SCHEMA``'s columns.
 
-    def record(self, docs: DataFrame, status: str = "created") -> int:
-        """Idempotent insert of manifest docs (from build_manifest_docs)."""
-        incoming = (
-            docs.select(
-                "date_prefix",
-                F.col("batch_id").cast("bigint"),
-                "manifest_path",
-                "file_paths",
-                F.col("file_count").cast("bigint"),
+        Rows are the state rows grouped by ``manifest_path``, limited to
+        ``manifests/…`` paths (stream micro-batches claim under
+        ``stream-batch-N`` and are not manifests).  ``batch_id`` is parsed
+        from the path.  ``status`` is the files' base status with
+        ``manifested`` shown as ``created``; a manifest's files flip
+        together, and should they ever disagree ``max`` ranks
+        ``manifested`` above ``failed`` above ``completed``, so a manifest
+        reads done only when all its files are.  ``created_at`` is the
+        earliest ``created_at`` of its files (when the first of them was
+        tracked, not when the claim happened); ``updated_at`` the latest.
+        """
+        base, _ = split_status(F.col("status"))
+        status = F.max(base)
+        return (
+            self.tracker.state()
+            .filter(F.col("manifest_path").like(f"{MANIFEST_PREFIX}/%"))
+            .groupBy("date_prefix", "manifest_path")
+            .agg(
+                F.sort_array(F.collect_list("file_path")).alias("file_paths"),
+                F.count("*").alias("file_count"),
+                F.when(status == "manifested", F.lit("created"))
+                .otherwise(status)
+                .alias("status"),
+                F.min("created_at").alias("created_at"),
+                F.max("updated_at").alias("updated_at"),
+                F.max("error_message").alias("error_message"),
             )
-            .withColumn("status", F.lit(status))
-            .withColumn("created_at", F.current_timestamp())
-            .withColumn("updated_at", F.current_timestamp())
-            .withColumn("error_message", F.lit(None).cast("string"))
+            .withColumn(
+                "batch_id",
+                F.regexp_extract("manifest_path", r"/batch-(\d+)-", 1).cast(
+                    "bigint"
+                ),
+            )
+            .select(*[f.split(" ")[0] for f in MANIFEST_SCHEMA.split(", ")])
         )
-        fresh = incoming.join(
+
+    def record(self, docs: DataFrame) -> int:
+        """How many of ``docs`` (from build_manifest_docs) have no claimed
+        file in the state table yet.  Writes nothing: claiming the files
+        is what records a manifest."""
+        return docs.join(
             self.manifests().select("manifest_path"),
             on="manifest_path",
             how="left_anti",
-        ).select(*[f.split(" ")[0] for f in MANIFEST_SCHEMA.split(", ")])
-        fresh = fresh.localCheckpoint(eager=True)
-        n = fresh.count()
-        if n:
-            (
-                fresh.repartition("date_prefix")
-                .write.mode("append")
-                .partitionBy("date_prefix")
-                .parquet(self.path)
-            )
-        return n
+        ).count()
 
     def update_status(
         self, manifest_path: str, status: str, error_message: str | None = None
-    ) -> None:
-        m = self.manifests().filter(F.col("manifest_path") == manifest_path)
-        dates = [r[0] for r in m.select("date_prefix").distinct().collect()]
-        if not dates:
-            return
-        updated = (
-            self.manifests()
-            .filter(F.col("date_prefix").isin(dates))
-            .withColumn(
-                "status",
-                F.when(
-                    F.col("manifest_path") == manifest_path, F.lit(status)
-                ).otherwise(F.col("status")),
-            )
-            .withColumn(
-                "updated_at",
-                F.when(
-                    F.col("manifest_path") == manifest_path,
-                    F.current_timestamp(),
-                ).otherwise(F.col("updated_at")),
-            )
-            .withColumn(
-                "error_message",
-                F.when(
-                    (F.col("manifest_path") == manifest_path)
-                    & F.lit(error_message is not None),
-                    F.lit(error_message),
-                ).otherwise(F.col("error_message")),
-            )
-        )
-        updated = updated.localCheckpoint(eager=True)
-        (
-            updated.repartition("date_prefix")
-            .write.mode("overwrite")
-            .partitionBy("date_prefix")
-            .parquet(self.path)
+    ) -> int:
+        """A manifest's status is its files' status: flip those."""
+        return self.tracker.update_status_for_manifest(
+            manifest_path, status, error_message=error_message
         )

@@ -14,9 +14,21 @@ Parquet table** the engine owns:
 - batch status flip  = keyed join preserving the shard suffix (J3,
   lambda_batch_status_updater.py:120-204)
 
+This table is the batch pipeline's **single commit point**.  The
+reference keeps its ``MANIFEST#`` meta rows in the same DynamoDB table as
+the file rows; here a manifest has no row of its own at all: the claim
+that stamps ``manifest_path`` on its files *is* its creation, and the
+flip of those files *is* its status change.  ``ManifestStore.manifests()``
+(state/manifest.py) is a view derived from these rows, so one write per
+state transition leaves nothing to drift out of step.
+
 Writes use **dynamic partition overwrite** so only the touched
 ``date_prefix`` partitions rewrite — at 100 TB the state table is large but
 each day's slice is small; a day-partition rewrite is bounded work.
+Every overwrite first checkpoints its rows, already shuffled by date, so
+it never reads the path it rewrites and the write itself runs no shuffle.
+Callers that know the touched dates pass them in (``dates`` /
+``date_prefix``) and save the job that would find them.
 Concurrency note: plain Parquet has no multi-writer transaction; the engine
 assumes a single driver (the reference's DynamoDB CAS guarded multiple
 Lambdas).  On a lakehouse deployment, swap the save calls for Delta MERGE —
@@ -27,7 +39,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from high_throughput_etl_pipeline_spark.functions.scalar import (
@@ -44,7 +56,32 @@ STATE_SCHEMA = (
     "ttl_epoch BIGINT"
 )
 
+_COLUMNS = [f.split(" ")[0] for f in STATE_SCHEMA.split(", ")]
 _KEY = ["date_prefix", "file_key"]
+
+
+def checkpoint_counting(
+    df: DataFrame, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint(eager=True)`` plus aggregate ``metrics``
+    (name → aggregate Column) over its rows, evaluated by the same job
+    instead of a count job of their own.  The metrics are observed in the
+    checkpoint's last stage, a result stage, whose per-partition updates
+    Spark applies once even when tasks retry."""
+    if not metrics:
+        return df.localCheckpoint(eager=True), {}
+    obs = Observation()
+    df = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+    df = df.localCheckpoint(eager=True)
+    return df, obs.get
+
+
+def has_data(path: str) -> bool:
+    """Whether a table directory holds any data entry (not only markers
+    such as ``_SUCCESS``).  A posix check; object stores would list."""
+    return os.path.isdir(path) and any(
+        not n.startswith((".", "_")) for n in os.listdir(path)
+    )
 
 
 def _date_from_manifest_path(manifest_path: str) -> str | None:
@@ -72,7 +109,7 @@ class FileStateTracker:
         (P14): rows past ``ttl_epoch`` are invisible, exactly like DynamoDB
         TTL expiry (builder.py:626,677) — physical deletion happens lazily
         on the next partition rewrite."""
-        if not self._exists():
+        if not has_data(self.path):
             return self.spark.createDataFrame([], STATE_SCHEMA)
         df = self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
         return df.filter(
@@ -80,31 +117,28 @@ class FileStateTracker:
             | (F.col("ttl_epoch") > F.unix_timestamp())
         )
 
-    def _exists(self) -> bool:
-        # local/posix check is fine for tests; object stores would list.
-        return os.path.isdir(self.path) and any(
-            not n.startswith((".", "_")) for n in os.listdir(self.path)
-        )
-
     # -- write primitives ----------------------------------------------
 
-    def _overwrite_partitions(self, df: DataFrame) -> None:
+    @staticmethod
+    def _checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+        """Rows shuffled to their date partition and cut from their
+        lineage — what an overwrite of the path they were read from needs —
+        with ``metrics`` over them (see :func:`checkpoint_counting`)."""
+        return checkpoint_counting(df.repartition("date_prefix"), **metrics)
+
+    def _overwrite_partitions(self, df: DataFrame, **metrics: Column) -> dict:
+        """Rewrite the date partitions ``df`` covers with its state
+        columns; returns ``metrics`` over its rows (helper columns they
+        read are dropped only after the checkpoint)."""
         # Materialize before overwriting the path we read from.
-        df = df.localCheckpoint(eager=True)
-        (
-            df.repartition("date_prefix")
-            .write.mode("overwrite")
-            .partitionBy("date_prefix")
-            .parquet(self.path)
-        )
+        df, counted = self._checkpoint(df, **metrics)
+        df.select(*_COLUMNS).write.mode("overwrite").partitionBy(
+            "date_prefix"
+        ).parquet(self.path)
+        return counted
 
     def _append(self, df: DataFrame) -> None:
-        (
-            df.repartition("date_prefix")
-            .write.mode("append")
-            .partitionBy("date_prefix")
-            .parquet(self.path)
-        )
+        df.write.mode("append").partitionBy("date_prefix").parquet(self.path)
 
     # -- operations ----------------------------------------------------
 
@@ -140,20 +174,24 @@ class FileStateTracker:
         )
         existing = self.state().select(*_KEY)
         fresh = incoming.join(existing, on=_KEY, how="left_anti").select(
-            *[f.split(" ")[0] for f in STATE_SCHEMA.split(", ")]
+            *_COLUMNS
         )
-        fresh = fresh.localCheckpoint(eager=True)
-        n = fresh.count()
+        fresh, counted = self._checkpoint(fresh, rows=F.count(F.lit(1)))
+        n = counted["rows"]
         if n:
             self._append(fresh)
         return n
 
-    def claim_files(self, claims: DataFrame) -> int:
+    def claim_files(
+        self, claims: DataFrame, dates: list[str] | None = None
+    ) -> int:
         """CAS claim: pending → manifested, stamping manifest_path.
 
         ``claims`` needs: date_prefix, file_key, manifest_path.  Rows whose
         current status is not pending are silently skipped (the losing
-        writer in the reference's conditional update).  Returns #claimed.
+        writer in the reference's conditional update).  ``dates`` are the
+        claims' date prefixes when the caller knows them (found with a
+        job otherwise).  Returns #claimed.
         """
         state = self.state()
         c = claims.select(
@@ -188,28 +226,35 @@ class FileStateTracker:
                 ),
             )
         )
-        touched_dates = [r[0] for r in c.select("date_prefix").distinct().collect()]
-        to_write = updated.filter(F.col("date_prefix").isin(touched_dates))
-        # materialize once; count the rows THIS call claimed (not every
-        # manifested row in the touched partitions), then persist
-        to_write = to_write.localCheckpoint(eager=True)
-        n = to_write.filter(F.col("_claim")).count()
-        self._overwrite_partitions(to_write.drop("_new_manifest", "_claim"))
-        return n
+        if dates is None:
+            dates = [r[0] for r in c.select("date_prefix").distinct().collect()]
+        # count the rows THIS call claimed (not every manifested row in
+        # the touched partitions) in the same job that materializes them
+        return self._overwrite_partitions(
+            updated.filter(F.col("date_prefix").isin(dates)),
+            claimed=F.count(F.when(F.col("_claim"), 1)),
+        )["claimed"]
 
     def update_status_for_manifest(
-        self, manifest_path: str, new_status: str, error_message: str | None = None
+        self,
+        manifest_path: str,
+        new_status: str,
+        error_message: str | None = None,
+        date_prefix: str | None = None,
     ) -> int:
         """Batch flip all files of a manifest, preserving shard suffix.
 
         Parity: lambda_batch_status_updater.py:53-204 (manifested#N →
         completed#N / failed#N after the Spark job finishes).
+        ``date_prefix`` is the manifest's date when the caller knows it:
+        the flip then rewrites that partition without first finding the
+        dates that hold the manifest's files.  Returns #dates rewritten.
         """
         state = self.state()
         # prune to the manifest's date partition when the path encodes one
         # (it always does for engine-built manifests) — the flip then scans
         # one partition instead of the whole state table
-        date_guess = _date_from_manifest_path(manifest_path)
+        date_guess = date_prefix or _date_from_manifest_path(manifest_path)
         if date_guess is not None:
             state = state.filter(F.col("date_prefix") == date_guess)
         hit = F.col("manifest_path") == manifest_path
@@ -230,10 +275,13 @@ class FileStateTracker:
                        F.lit(error_message)).otherwise(F.col("error_message")),
             )
         )
-        dates = [
-            r[0]
-            for r in state.filter(hit).select("date_prefix").distinct().collect()
-        ]
+        if date_prefix is not None:
+            dates = [date_prefix]
+        else:
+            dates = [
+                r[0]
+                for r in state.filter(hit).select("date_prefix").distinct().collect()
+            ]
         if not dates:
             return 0
         self._overwrite_partitions(updated.filter(F.col("date_prefix").isin(dates)))
