@@ -31,8 +31,9 @@ def assign_batches(
     only full batches survive (builder.py:1055-1062); the orphan-flush path
     passes ``allow_partial=True`` with threshold ``min_partial``
     (builder.py:737-746).  ``allow_partial`` may also be a boolean Column
-    over ``date_col``, deciding per date, so one pass batches today's full
-    batches and flushes stale dates' partial ones.
+    over ``date_col``, deciding per date: that is the pipeline's form, one
+    pass that batches today's full batches and flushes stale dates'
+    partial ones.  A bool is the same as its literal Column.
 
     Both windows partition by date, so the batch sizes come out of the
     same shuffle as the numbering.
@@ -44,6 +45,5 @@ def assign_batches(
     batched = batched.withColumn(
         "_batch_n", F.count(F.lit(1)).over(Window.partitionBy(date_col, "batch_id"))
     )
-    partial = allow_partial if isinstance(allow_partial, Column) else F.lit(allow_partial)
-    threshold = F.when(partial, min_partial).otherwise(batch_size)
+    threshold = F.when(F.lit(allow_partial), min_partial).otherwise(batch_size)
     return batched.filter(F.col("_batch_n") >= threshold).drop("_batch_n")

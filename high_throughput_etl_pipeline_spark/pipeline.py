@@ -51,6 +51,7 @@ from high_throughput_etl_pipeline_spark.operators.validation import (
     valid_files,
     validate_files,
 )
+from high_throughput_etl_pipeline_spark.sources.reports import require_local_path
 from high_throughput_etl_pipeline_spark.state.lock import DriverLock
 from high_throughput_etl_pipeline_spark.state.manifest import (
     ManifestStore,
@@ -151,6 +152,10 @@ class CircuitBreaker:
 
 
 class PipelineRunner:
+    """The batch pipeline over one state table.  ``reports_dir`` is a
+    local path: run reports are written with local file calls, and a URI
+    such as ``s3a://…`` raises ``ValueError`` here, before any run."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -169,6 +174,8 @@ class PipelineRunner:
         self.output_dir = output_dir
         self.quarantine_dir = quarantine_dir
         self.batch_size = batch_size
+        if reports_dir:
+            require_local_path(reports_dir)
         self.reports_dir = reports_dir
         self.dlq_dir = dlq_dir
         self.breaker = CircuitBreaker(
@@ -316,8 +323,7 @@ class PipelineRunner:
     def _flip(self, m, status: str, error: str | None = None) -> None:
         """The manifest's one commit: flip its files in the state table."""
         self.tracker.update_status_for_manifest(
-            m["manifest_path"], status, error_message=error,
-            date_prefix=m["date_prefix"],
+            m["manifest_path"], status, error_message=error
         )
 
     # -- dead-letter queue (ST7) ---------------------------------------

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,13 +77,23 @@ def register_report_views(
         glue_df.createOrReplaceTempView("glue_reports")
 
 
+def require_local_path(path: str) -> str:
+    """``path`` unchanged if it is a local path; a ``ValueError`` for a URI
+    such as ``s3a://bucket/logs``, which local file calls would turn into
+    a directory named after the scheme."""
+    if re.match(r"[A-Za-z][A-Za-z0-9+.-]*:/", path):
+        raise ValueError(f"reports must go to a local path, not {path!r}")
+    return path
+
+
 def write_report(report: dict, path: str) -> None:
-    """S6 — write one execution report as a one-line JSON file in ``path``.
+    """S6 — write one execution report as a one-line JSON file in the
+    local directory ``path`` (a URI raises ``ValueError``).
 
     Atomic: the doc goes to a ``.``-prefixed name, which Spark's file
     listing skips, and is renamed into place, so a reader of the directory
     never sees a partial report."""
-    os.makedirs(path, exist_ok=True)
+    os.makedirs(require_local_path(path), exist_ok=True)
     name = f"report-{uuid.uuid4().hex}.json"
     tmp = os.path.join(path, f".{name}")
     with open(tmp, "w") as f:

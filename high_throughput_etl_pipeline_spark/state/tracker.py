@@ -27,8 +27,9 @@ Writes use **dynamic partition overwrite** so only the touched
 each day's slice is small; a day-partition rewrite is bounded work.
 Every overwrite first checkpoints its rows, already shuffled by date, so
 it never reads the path it rewrites and the write itself runs no shuffle.
-Callers that know the touched dates pass them in (``dates`` /
-``date_prefix``) and save the job that would find them.
+A flip reads its partition from the manifest path; a claim's caller
+that knows the touched dates passes them (``dates``) and saves the job
+that would find them.
 Concurrency note: plain Parquet has no multi-writer transaction; the engine
 assumes a single driver (the reference's DynamoDB CAS guarded multiple
 Lambdas).  On a lakehouse deployment, swap the save calls for Delta MERGE —
@@ -189,9 +190,15 @@ class FileStateTracker:
 
         ``claims`` needs: date_prefix, file_key, manifest_path.  Rows whose
         current status is not pending are silently skipped (the losing
-        writer in the reference's conditional update).  ``dates`` are the
-        claims' date prefixes when the caller knows them (found with a
-        job otherwise).  Returns #claimed.
+        writer in the reference's conditional update).  Returns #claimed.
+
+        ``dates`` are the claims' date prefixes when the caller knows them;
+        otherwise one collect job finds them.  They cannot be derived
+        inside the plan at no cost: the rewrite must read only the touched
+        partitions, and Spark prunes a partition scan by a join only with
+        dynamic partition pruning, which needs a selective filter on the
+        claims side (a checkpointed claims frame has none) and a broadcast
+        job of its own.  A literal filter on ``dates`` prunes statically.
         """
         state = self.state()
         c = claims.select(
@@ -240,21 +247,18 @@ class FileStateTracker:
         manifest_path: str,
         new_status: str,
         error_message: str | None = None,
-        date_prefix: str | None = None,
     ) -> int:
         """Batch flip all files of a manifest, preserving shard suffix.
 
         Parity: lambda_batch_status_updater.py:53-204 (manifested#N →
         completed#N / failed#N after the Spark job finishes).
-        ``date_prefix`` is the manifest's date when the caller knows it:
-        the flip then rewrites that partition without first finding the
-        dates that hold the manifest's files.  Returns #dates rewritten.
+        Returns #dates rewritten.
         """
         state = self.state()
         # prune to the manifest's date partition when the path encodes one
         # (it always does for engine-built manifests) — the flip then scans
-        # one partition instead of the whole state table
-        date_guess = date_prefix or _date_from_manifest_path(manifest_path)
+        # and rewrites one partition, with no job to find the dates
+        date_guess = _date_from_manifest_path(manifest_path)
         if date_guess is not None:
             state = state.filter(F.col("date_prefix") == date_guess)
         hit = F.col("manifest_path") == manifest_path
@@ -275,13 +279,14 @@ class FileStateTracker:
                        F.lit(error_message)).otherwise(F.col("error_message")),
             )
         )
-        if date_prefix is not None:
-            dates = [date_prefix]
-        else:
-            dates = [
+        dates = (
+            [date_guess]
+            if date_guess is not None
+            else [
                 r[0]
                 for r in state.filter(hit).select("date_prefix").distinct().collect()
             ]
+        )
         if not dates:
             return 0
         self._overwrite_partitions(updated.filter(F.col("date_prefix").isin(dates)))

@@ -451,6 +451,26 @@ def test_pipeline_writes_reports(spark, ndjson_dir, tmp_path):
     assert sum(r["records_processed"] for r in perf) == res.records_written
 
 
+def test_reports_dir_must_be_local(spark, tmp_path, monkeypatch):
+    """Reports are written with local file calls: a URI reports_dir is
+    refused up front, not turned into a local directory named 's3a:'."""
+    import os
+
+    import pytest
+
+    from high_throughput_etl_pipeline_spark.sources.reports import write_report
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local path"):
+        PipelineRunner(
+            spark, str(tmp_path / "state"), str(tmp_path / "out"),
+            reports_dir="s3a://bucket/logs/glue",
+        )
+    with pytest.raises(ValueError, match="local path"):
+        write_report({"report_id": "r"}, "file:/logs/glue")
+    assert not os.listdir(tmp_path)
+
+
 def test_merge_upsert_semantics(spark, tmp_path):
     """Generic MERGE: matched rows update, new keys insert, untouched
     partitions stay byte-identical (partition-bounded work)."""
