@@ -137,7 +137,6 @@ def merge_upsert(
     """
     import os
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     updates = updates.dropDuplicates(key_cols)
     exists = os.path.isdir(target_path) and any(
         not n.startswith((".", "_")) for n in os.listdir(target_path)
@@ -168,6 +167,7 @@ def merge_upsert(
     (
         merged.repartition(partition_col)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(target_path)
     )

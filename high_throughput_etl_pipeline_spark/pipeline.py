@@ -19,6 +19,19 @@ in the file-state table).  Manifest paths carry a per-run stamp, so two
 runs on one date never share one.  Invalid files are quarantined once per
 ``file_path``, and run reports are single JSON files written driver-side.
 
+Concurrency: a run's manifests are dispatched together, the way the
+reference runs one Glue job per manifest with many jobs at once.  Worker
+threads only read input and write output (``process_manifest`` with its
+retry and backoff); the driver's main thread commits each manifest as it
+finishes: its flip, the breaker, the DLQ doc, the run report and the
+``RunResult`` counts.  The state table, the breaker and the reports
+therefore keep a single writer and need no lock.  The in-flight limit is
+the breaker's remaining budget, ``threshold - consecutive_failures``, so
+a queue that fails throughout still fails exactly ``threshold``
+manifests before the breaker trips, and a ``threshold=1`` runner is
+serial.  Appends to one output path are serialized in the sink
+(sources/parquet_sink.py).
+
 Failure path (ST7): a manifest that exhausts MAX_RETRIES flips to
 ``failed`` AND lands in a dead-letter directory as a JSON document (the
 reference's 3-receive SQS DLQ, terraform/modules/sqs/main.tf:27-66);
@@ -35,11 +48,14 @@ import json
 import os
 import time
 import traceback
+from collections import deque
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from high_throughput_etl_pipeline_spark.ingest import process_manifest
 from high_throughput_etl_pipeline_spark.operators.batching import (
@@ -92,10 +108,12 @@ class CircuitBreaker:
     A persistently failing sink (bad output volume, broken schema, dead
     downstream) makes every retry loop burn a full backoff cycle per
     manifest; the breaker stops feeding it after ``threshold``
-    CONSECUTIVE manifest failures.  Tripped state parks the remaining
-    queue untouched (manifests stay ``created``, files stay claimed) so
-    nothing is double-processed or falsely failed, and persists as a
-    JSON doc beside the state table so a restarted driver stays tripped.
+    CONSECUTIVE manifest failures, counted in the order manifests
+    finish (they run concurrently, see ``_drive_manifests``).  Tripped
+    state parks the remaining queue untouched (manifests stay
+    ``created``, files stay claimed) so nothing is double-processed or
+    falsely failed, and persists as a JSON doc beside the state table
+    so a restarted driver stays tripped.
     ``reset()`` is the deliberate human step that resumes dispatch —
     pair it with ``PipelineRunner.resume_pending_manifests()``.
     """
@@ -257,8 +275,7 @@ class PipelineRunner:
             claims, dates=sorted({m["date_prefix"] for m in manifests})
         )
 
-        for m in manifests:
-            self._drive_manifest(m, res, schema)
+        self._drive_manifests(manifests, res, schema)
         res.breaker_tripped = not self.breaker.allow()
         return res
 
@@ -276,18 +293,49 @@ class PipelineRunner:
         if counted["rows"]:
             fresh.write.mode("append").parquet(self.quarantine_dir)
 
-    def _drive_manifest(self, m, res: RunResult, schema) -> None:
-        """Process one manifest through retry/flip/DLQ/report, guarded by
-        the circuit breaker: while tripped, the manifest is left PARKED
-        (store status ``created``, files claimed) — not failed, not
-        DLQ'd — so a reset + resume_pending_manifests() re-drives it."""
-        if not self.breaker.allow():
-            res.manifests_skipped += 1
-            return
-        started = time.time()
-        ok, err = self._process_with_retry(
-            list(m["file_paths"]), m["date_prefix"], schema
-        )
+    def _drive_manifests(self, manifests, res: RunResult, schema) -> None:
+        """Process ``manifests`` concurrently and commit each as it
+        finishes.  Workers run ``_process_with_retry`` (input and output
+        only); this thread does every state write in ``_commit_manifest``.
+        At most ``threshold - consecutive_failures`` manifests are in
+        flight, so the breaker trips at exactly ``threshold`` failures
+        even if every one in flight fails.  While the breaker is tripped
+        the rest of the queue is left PARKED (store status ``created``,
+        files claimed) — not failed, not DLQ'd — so a reset +
+        resume_pending_manifests() re-drives it."""
+        queue = deque(manifests)
+        running: dict = {}
+        with ThreadPoolExecutor(max_workers=max(self.breaker.threshold, 1)) as pool:
+            while queue or running:
+                # the breaker's remaining budget: every manifest in flight
+                # may fail.  At least 1, for a breaker saved under a
+                # higher threshold than this runner's
+                budget = max(
+                    self.breaker.threshold - self.breaker.consecutive_failures, 1
+                )
+                while queue and self.breaker.allow() and len(running) < budget:
+                    m = queue.popleft()
+                    # the worker's jobs carry the caller's job group and tags
+                    work = inheritable_thread_target(self.spark)(
+                        self._process_with_retry
+                    )
+                    fut = pool.submit(
+                        work, list(m["file_paths"]), m["date_prefix"], schema
+                    )
+                    running[fut] = (m, time.time())
+                if not running:
+                    break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    m, started = running.pop(fut)
+                    self._commit_manifest(m, *fut.result(), started, res)
+        res.manifests_skipped += len(queue)
+
+    def _commit_manifest(
+        self, m, ok, err, started: float, res: RunResult
+    ) -> None:
+        """A processed manifest's flip, breaker update, DLQ doc, run report
+        and counts."""
         if ok is not None:
             res.records_written += ok
             res.manifests_succeeded += 1
@@ -315,8 +363,7 @@ class PipelineRunner:
                 .collect(),
                 key=lambda m: (m["date_prefix"], m["batch_id"]),
             )
-            for m in parked:
-                self._drive_manifest(m, res, schema)
+            self._drive_manifests(parked, res, schema)
             res.breaker_tripped = not self.breaker.allow()
             return res
 

@@ -22,8 +22,9 @@ flip of those files *is* its status change.  ``ManifestStore.manifests()``
 (state/manifest.py) is a view derived from these rows, so one write per
 state transition leaves nothing to drift out of step.
 
-Writes use **dynamic partition overwrite** so only the touched
-``date_prefix`` partitions rewrite — at 100 TB the state table is large but
+Writes use **dynamic partition overwrite**, set on each writer (the
+session's mode is left alone), so only the touched ``date_prefix``
+partitions rewrite — at 100 TB the state table is large but
 each day's slice is small; a day-partition rewrite is bounded work.
 Every overwrite first checkpoints its rows, already shuffled by date, so
 it never reads the path it rewrites and the write itself runs no shuffle.
@@ -101,7 +102,6 @@ class FileStateTracker:
         self.spark = spark
         self.path = path
         self.ttl_days = ttl_days
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # -- read side -----------------------------------------------------
 
@@ -133,9 +133,9 @@ class FileStateTracker:
         read are dropped only after the checkpoint)."""
         # Materialize before overwriting the path we read from.
         df, counted = self._checkpoint(df, **metrics)
-        df.select(*_COLUMNS).write.mode("overwrite").partitionBy(
-            "date_prefix"
-        ).parquet(self.path)
+        df.select(*_COLUMNS).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("date_prefix").parquet(self.path)
         return counted
 
     def _append(self, df: DataFrame) -> None:

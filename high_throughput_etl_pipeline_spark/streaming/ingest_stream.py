@@ -103,11 +103,14 @@ def start_ingest_stream(
         # … and the sink itself is idempotent regardless of the tracker:
         # partitions carry the batch id, and dynamic partition overwrite
         # makes a replay rewrite `_batch={id}/...` in place (never append
-        # the same rows twice)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # the same rows twice).  The mode rides on the writer: this batch
+        # runs in the stream's cloned session, which a conf set on the
+        # outer session never reaches (static mode there would wipe the
+        # earlier batches' partitions)
         (
             batch_df.withColumn("_batch", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch", "_date")
             .option("compression", "snappy")
             .parquet(output_dir)

@@ -203,8 +203,12 @@ def test_compact_partition_reduces_files(spark, tmp_path):
 
     frag = glob.glob(f"{out}/_date=2026-08-12/*.parquet")
     assert len(frag) >= 16
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(advisory, None)
     n = compact_partition(spark, out, "2026-08-12")
     assert n == 4000
+    # the compaction's advisory size must not outlive it in the session
+    assert spark.conf.get(advisory, None) == before
     compacted = glob.glob(f"{out}/_date=2026-08-12/*.parquet")
     assert len(compacted) < len(frag)
     back = spark.read.parquet(out)

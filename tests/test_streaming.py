@@ -65,6 +65,37 @@ def test_stream_drain_and_exactly_once(spark, tmp_path):
     }
 
 
+def test_stream_keeps_every_batch_under_static_session_mode(spark, tmp_path):
+    """Each micro-batch overwrites only its own ``_batch=`` partition even
+    when the session's partitionOverwriteMode is ``static``: the batch
+    writes through the stream's cloned session, so the dynamic mode must
+    ride on the writer, not on a session conf."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    ind = tmp_path / "in"
+    ind.mkdir()
+    for i in range(3):
+        with open(ind / f"2026-08-12-b{i}.ndjson", "w") as f:
+            for j in range(10):
+                f.write(json.dumps({"id": i * 100 + j, "kind": "k"}) + "\n")
+    out = str(tmp_path / "out")
+    previous = spark.conf.get(key, None)
+    spark.conf.set(key, "static")
+    try:
+        q = start_ingest_stream(
+            spark, str(ind), out, str(tmp_path / "ckpt"), schema=SCHEMA,
+            max_files_per_trigger=1, available_now=True,
+        )
+        q.awaitTermination(120)
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
+    df = spark.read.parquet(out)
+    assert df.select("_batch").distinct().count() == 3
+    assert df.count() == 30
+
+
 def test_stream_replay_after_checkpoint_loss_no_duplicates(spark, tmp_path):
     """ST4: foreachBatch is at-least-once — simulate replay-after-sink-
     write by deleting the CHECKPOINT (so every batch re-fires) and
