@@ -47,7 +47,6 @@ def process_manifest(
     output_dir: str,
     date_prefix: str | None = None,
     schema=None,
-    compact: bool = False,
     source_format: str = "ndjson",
 ) -> int:
     """Run one manifest end-to-end; returns records written.
@@ -95,6 +94,6 @@ def process_manifest(
         shaped = shaped.withColumn("_date", F.lit(date_prefix))
     write_date_partitioned_parquet(
         shaped, output_dir, date_col="_date",
-        avg_row_bytes=avg_row, compact=compact,
+        avg_row_bytes=avg_row,
     )
     return int(obs.get["rows"])

@@ -347,24 +347,6 @@ def span_dedup(
 # -- MinHash + LSH --------------------------------------------------------
 
 
-def minhash_signature(shingles_col, num_hashes: int = 16) -> F.Column:
-    """MinHash signature: array of ``num_hashes`` mins over shingle hashes.
-
-    ``shingles_col`` must be a MATERIALIZED array column (a real column via
-    withColumn, not an inline expression) — otherwise Catalyst re-evaluates
-    the whole shingling pipeline once per hash lane.  h_i(s) =
-    xxhash64(i, s): native JVM hash, one pass per lane, no string hex.
-    """
-    def lane(i: int) -> F.Column:
-        # single-arg lambda (pyspark binds one lambda var per declared
-        # parameter; a default arg would become the array-index variable)
-        return F.array_min(
-            F.transform(shingles_col, lambda s: F.xxhash64(F.lit(i), s))
-        )
-
-    return F.array(*[lane(i) for i in range(num_hashes)])
-
-
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -23,20 +23,22 @@ Concurrency: a run's manifests are dispatched together, the way the
 reference runs one Glue job per manifest with many jobs at once.  Worker
 threads only read input and write output (``process_manifest`` with its
 retry and backoff); the driver's main thread commits each manifest as it
-finishes: its flip, the breaker, the DLQ doc, the run report and the
-``RunResult`` counts.  The state table, the breaker and the reports
-therefore keep a single writer and need no lock.  The in-flight limit is
-the breaker's remaining budget, ``threshold - consecutive_failures``, so
-a queue that fails throughout still fails exactly ``threshold``
-manifests before the breaker trips, and a ``threshold=1`` runner is
-serial.  Appends to one output path are serialized in the sink
-(sources/parquet_sink.py).
+finishes: its flip, the breaker, the run report and the ``RunResult``
+counts.  The state table, the breaker and the reports therefore keep a
+single writer and need no lock.  The in-flight limit is the breaker's
+remaining budget, ``threshold - consecutive_failures``, so a queue that
+fails throughout still fails exactly ``threshold`` manifests before the
+breaker trips, and a ``threshold=1`` runner is serial.  Appends to one
+output path are serialized in the sink (sources/parquet_sink.py).
 
 Failure path (ST7): a manifest that exhausts MAX_RETRIES flips to
-``failed`` AND lands in a dead-letter directory as a JSON document (the
-reference's 3-receive SQS DLQ, terraform/modules/sqs/main.tf:27-66);
-``reprocess_failed()`` drains the DLQ back through the processor
-(reprocess-failed.sh).
+``failed``, with the tail of its traceback on its files' rows.  Those
+rows are the dead letters (the reference's 3-receive SQS DLQ,
+terraform/modules/sqs/main.tf:27-66): ``reprocess_failed()`` re-drives
+the ``failed`` manifests (reprocess-failed.sh) and
+``resume_pending_manifests()`` the parked ``created`` ones, both through
+the dispatcher a run uses, so a redrive is concurrent, bounded by the
+breaker and committed like a run.
 
 Each stage is the operator documented in its own module; this file only
 sequences them, mirroring the Step Functions definition.
@@ -115,7 +117,8 @@ class CircuitBreaker:
     falsely failed, and persists as a JSON doc beside the state table
     so a restarted driver stays tripped.
     ``reset()`` is the deliberate human step that resumes dispatch —
-    pair it with ``PipelineRunner.resume_pending_manifests()``.
+    pair it with ``PipelineRunner.resume_pending_manifests()`` (parked
+    manifests) or ``reprocess_failed()`` (failed ones).
     """
 
     def __init__(self, path: str, threshold: int = BREAKER_THRESHOLD):
@@ -182,7 +185,6 @@ class PipelineRunner:
         quarantine_dir: str | None = None,
         batch_size: int = MAX_FILES_PER_MANIFEST,
         reports_dir: str | None = None,
-        dlq_dir: str | None = None,
         ttl_days: int | None = None,
         breaker_threshold: int = BREAKER_THRESHOLD,
     ):
@@ -195,7 +197,6 @@ class PipelineRunner:
         if reports_dir:
             require_local_path(reports_dir)
         self.reports_dir = reports_dir
-        self.dlq_dir = dlq_dir
         self.breaker = CircuitBreaker(
             state_path + "_breaker.json", threshold=breaker_threshold
         )
@@ -300,9 +301,10 @@ class PipelineRunner:
         At most ``threshold - consecutive_failures`` manifests are in
         flight, so the breaker trips at exactly ``threshold`` failures
         even if every one in flight fails.  While the breaker is tripped
-        the rest of the queue is left PARKED (store status ``created``,
-        files claimed) — not failed, not DLQ'd — so a reset +
-        resume_pending_manifests() re-drives it."""
+        the rest of the queue is left as it was and counted as skipped: a
+        run's manifests stay PARKED (store status ``created``, files
+        claimed), a redrive's stay ``failed``, so a reset + the matching
+        redrive picks them up again."""
         queue = deque(manifests)
         running: dict = {}
         with ThreadPoolExecutor(max_workers=max(self.breaker.threshold, 1)) as pool:
@@ -334,8 +336,8 @@ class PipelineRunner:
     def _commit_manifest(
         self, m, ok, err, started: float, res: RunResult
     ) -> None:
-        """A processed manifest's flip, breaker update, DLQ doc, run report
-        and counts."""
+        """A processed manifest's flip, breaker update, run report and
+        counts."""
         if ok is not None:
             res.records_written += ok
             res.manifests_succeeded += 1
@@ -344,8 +346,8 @@ class PipelineRunner:
         else:
             res.manifests_failed += 1
             res.errors.append(err or "unknown")
-            self._flip(m, "failed", (err or "")[:1000])
-            self._write_dlq_entry(m, err)
+            # keep the tail: the exception line closes the traceback
+            self._flip(m, "failed", (err or "")[-1000:])
             self.breaker.record_failure()
         if self.reports_dir:
             self._write_run_report(m, ok, err, started)
@@ -353,17 +355,28 @@ class PipelineRunner:
     def resume_pending_manifests(self, schema=None) -> RunResult:
         """Drive manifests the tripped breaker left parked (store status
         still ``created``).  Call after ``breaker.reset()`` — with the
-        breaker still open this is a no-op (everything skips again).
-        The parked set is a scan of the state table's claimed rows."""
+        breaker still open this is a no-op (everything skips again)."""
+        return self._redrive("created", schema)
+
+    def reprocess_failed(self, schema=None) -> RunResult:
+        """Re-drive the dead letters, the manifests whose store status is
+        ``failed`` (reprocess-failed.sh): success flips them to
+        ``completed``, failure flips them to ``failed`` again with the
+        fresh error.  Counted on the breaker like a run, so a sink that
+        is still broken trips it after ``threshold`` manifests."""
+        return self._redrive("failed", schema)
+
+    def _redrive(self, status: str, schema) -> RunResult:
+        """Drive every manifest the state table shows in ``status``."""
         with self.lock.hold():
             res = RunResult()
-            parked = sorted(
+            rows = sorted(
                 self.manifest_store.manifests()
-                .filter(F.col("status") == "created")
+                .filter(F.col("status") == status)
                 .collect(),
                 key=lambda m: (m["date_prefix"], m["batch_id"]),
             )
-            self._drive_manifests(parked, res, schema)
+            self._drive_manifests(rows, res, schema)
             res.breaker_tripped = not self.breaker.allow()
             return res
 
@@ -372,65 +385,6 @@ class PipelineRunner:
         self.tracker.update_status_for_manifest(
             m["manifest_path"], status, error_message=error
         )
-
-    # -- dead-letter queue (ST7) ---------------------------------------
-
-    def _write_dlq_entry(self, m, err: str | None) -> None:
-        """Park an exhausted manifest in the DLQ as one JSON doc (the SQS
-        dead-letter message shape; queryable via spark.read.json)."""
-        if not self.dlq_dir:
-            return
-        os.makedirs(self.dlq_dir, exist_ok=True)
-        name = m["manifest_path"].replace("/", "__").replace(".json", "")
-        doc = {
-            "manifest_path": m["manifest_path"],
-            "date_prefix": m["date_prefix"],
-            "file_paths": list(m["file_paths"]),
-            "error": (err or "")[:4000],
-            "attempts": MAX_RETRIES + 1,
-            "failed_at": datetime.now(timezone.utc).isoformat(),
-        }
-        with open(os.path.join(self.dlq_dir, name + ".dlq.json"), "w") as f:
-            json.dump(doc, f)
-
-    def dlq_entries(self) -> list[dict]:
-        if not self.dlq_dir or not os.path.isdir(self.dlq_dir):
-            return []
-        out = []
-        for n in sorted(os.listdir(self.dlq_dir)):
-            if n.endswith(".dlq.json"):
-                with open(os.path.join(self.dlq_dir, n)) as f:
-                    doc = json.load(f)
-                doc["_dlq_file"] = os.path.join(self.dlq_dir, n)
-                out.append(doc)
-        return out
-
-    def reprocess_failed(self, schema=None) -> RunResult:
-        """Drain the DLQ (reprocess-failed.sh): re-run each parked
-        manifest; success removes the DLQ doc and flips state to
-        completed, failure leaves it parked with the fresh error."""
-        with self.lock.hold():
-            return self._reprocess_failed_locked(schema)
-
-    def _reprocess_failed_locked(self, schema=None) -> RunResult:
-        res = RunResult()
-        for doc in self.dlq_entries():
-            started = time.time()
-            ok, err = self._process_with_retry(
-                doc["file_paths"], doc["date_prefix"], schema
-            )
-            if ok is not None:
-                res.records_written += ok
-                res.manifests_succeeded += 1
-                self._flip(doc, "completed")
-                os.remove(doc["_dlq_file"])
-            else:
-                res.manifests_failed += 1
-                res.errors.append(err or "unknown")
-                self._flip(doc, "failed", (err or "")[:1000])
-            if self.reports_dir:
-                self._write_run_report(doc, ok, err, started)
-        return res
 
     def _write_run_report(self, m, ok, err, started: float) -> None:
         """§3.1 step 7 — per-manifest execution report (glue_batch_job.py

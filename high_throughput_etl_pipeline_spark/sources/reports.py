@@ -136,7 +136,7 @@ def build_run_report(
             "status": status,
         },
         "parquet_files": [],
-        "error_message": "; ".join(e[:1000] for e in errors) if errors else None,
+        "error_message": "; ".join(e[-1000:] for e in errors) if errors else None,
         "report_metadata": {
             "generated_at": ended_at,
             "report_version": "1.0",

@@ -34,9 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from high_throughput_etl_pipeline_spark.functions.scalar import (
-    cast_all_to_string,
     extract_date_prefix,
 )
+from high_throughput_etl_pipeline_spark.ingest import transform
 from high_throughput_etl_pipeline_spark.operators.batching import (
     MAX_FILES_PER_MANIFEST,
 )
@@ -63,12 +63,8 @@ def start_ingest_stream(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(input_dir)
     )
-    shaped = (
-        cast_all_to_string(
-            raw.withColumn("_processing_timestamp", F.current_timestamp())
-            .withColumn("_source_file", F.input_file_name())
-        )
-        .withColumn("_date", extract_date_prefix(F.col("_source_file")))
+    shaped = transform(raw).withColumn(
+        "_date", extract_date_prefix(F.col("_source_file"))
     )
 
     tracker = FileStateTracker(spark, state_path) if state_path else None
@@ -88,7 +84,6 @@ def start_ingest_stream(
             )
             if already:
                 return
-        if tracker is not None:
             files = (
                 batch_df.select(F.col("_source_file").alias("file_path"))
                 .distinct()
@@ -116,17 +111,13 @@ def start_ingest_stream(
             .parquet(output_dir)
         )
         if tracker is not None:
-            done = (
-                batch_df.select(F.col("_source_file").alias("file_path"))
-                .distinct()
-                .withColumn("date_prefix", extract_date_prefix(F.col("file_path")))
-                .withColumn(
-                    "file_key",
-                    F.element_at(F.split(F.col("file_path"), "/"), -1),
+            tracker.claim_files(
+                files.select(
+                    "date_prefix",
+                    F.col("file_name").alias("file_key"),
+                    F.lit(f"stream-batch-{batch_id}").alias("manifest_path"),
                 )
-                .withColumn("manifest_path", F.format_string("stream-batch-%d", F.lit(batch_id)))
             )
-            tracker.claim_files(done.select("date_prefix", "file_key", "manifest_path"))
             tracker.update_status_for_manifest(f"stream-batch-{batch_id}", "completed")
 
     writer = shaped.writeStream.option("checkpointLocation", checkpoint_dir)

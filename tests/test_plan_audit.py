@@ -1,6 +1,7 @@
-"""Fleet-wide plan audit: EVERY registered query's physical plan is
-checked for the anti-patterns this repo bans, at sf0.001 (construction
-cost only — no result collection):
+"""Fleet-wide plan audit: the anti-patterns this repo bans in EVERY
+registered query's physical plan at sf0.001.  The audit runs per query
+in test_queries_contract.py::test_query_runs_at_smoke_sf, on the same
+build that is then counted, so the registry is built once per suite:
 
 - ``CartesianProduct``   — an unbroadcast cross join; every intentional
   one-row/model cross join must broadcast (BroadcastNestedLoopJoin).
@@ -20,15 +21,14 @@ cost only — no result collection):
   the Aggregate (or the localCheckpoint barrier that pinned it).
 
 Per-query pins live in test_plans.py; this is the backstop that new
-queries cannot skip."""
+queries cannot skip.  Here: the banned names and the window detector,
+with a check that the detector is not vacuous."""
 
 from __future__ import annotations
 
 import re
 
-from high_throughput_etl_pipeline_spark.queries import QUERIES
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF
 
 FORBIDDEN = ("CartesianProduct", "BatchEvalPython", "ArrowEvalPython")
 
@@ -106,26 +106,3 @@ def test_single_task_window_detector_not_vacuous(spark):
     )
     ok_plan = ok._jdf.queryExecution().executedPlan().toString()
     assert not single_task_window_violations(ok_plan), ok_plan
-
-
-def test_every_query_plan_free_of_banned_shapes(spark):
-    failures: dict[str, str] = {}
-    for name, fn in QUERIES.items():
-        try:
-            df = fn(spark, SF)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as ex:  # construction failure is its own bug
-            failures[name] = f"construction raised: {ex!r:.200}"
-            continue
-        for bad in FORBIDDEN:
-            if bad in plan:
-                failures[name] = bad
-                break
-        else:
-            viols = single_task_window_violations(plan)
-            if viols:
-                failures[name] = (
-                    "single-task window over unaggregated input:\n"
-                    + viols[0]
-                )
-    assert not failures, failures

@@ -1,5 +1,6 @@
-"""Driver-contract smoke tests: every query runs at sf0.001 and the
-oracle dict stays consistent with the query registry.
+"""Driver-contract smoke tests: every query runs at sf0.001, its plan is
+free of the banned shapes (tests/test_plan_audit.py), and the oracle
+dict stays consistent with the query registry.
 
 (The full value-level comparison vs DuckDB runs in
 tools/check_correctness.py at sf0.01 — too slow for the unit suite.)"""
@@ -10,6 +11,7 @@ import pytest
 
 import __spark_entry__ as contract
 from tests.conftest import SF_SMOKE
+from tests.test_plan_audit import FORBIDDEN, single_task_window_violations
 
 
 def test_entry_smoke(spark):
@@ -27,6 +29,13 @@ def test_every_oracle_has_a_query():
 
 @pytest.mark.parametrize("name", sorted(contract.queries()))
 def test_query_runs_at_smoke_sf(spark, name):
+    """One build per query: audit its executed plan, then count its rows."""
     df = contract.queries()[name](spark, SF_SMOKE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not [bad for bad in FORBIDDEN if bad in plan], plan
+    viols = single_task_window_violations(plan)
+    assert not viols, (
+        "single-task window over unaggregated input:\n" + viols[0]
+    )
     assert df.count() >= 0
     assert len(df.columns) > 0

@@ -150,14 +150,32 @@ def test_ttl_expired_rows_invisible(spark, tmp_path):
     assert live["ttl_epoch"] is not None and live["ttl_epoch"] > 1
 
 
+def _dead_letters(runner):
+    """The dead letters: manifests whose state rows read ``failed``."""
+    return (
+        runner.manifest_store.manifests()
+        .filter(F.col("status") == "failed")
+        .collect()
+    )
+
+
 def test_dlq_fail_reprocess_cycle(spark, ndjson_dir, tmp_path, monkeypatch):
-    """ST7: manifest exhausts retries → failed + DLQ doc; fixing the input
-    and reprocess_failed() drains the DLQ → completed."""
+    """ST7: manifest exhausts retries → its state rows read ``failed``
+    with the cause kept in the error; fixing the input and
+    reprocess_failed() re-drive it → completed.  The state table is the
+    only record of the dead letter: the runner has no DLQ directory."""
     import json as _json
 
     import high_throughput_etl_pipeline_spark.pipeline as pl
 
     monkeypatch.setattr(pl, "BACKOFF_SECONDS", 0.01)
+    calls, real = [], pl.process_manifest
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pl, "process_manifest", counted)
     d, paths = ndjson_dir
     missing = str(tmp_path / "input" / "2026-08-12-missing.ndjson")
     runner = PipelineRunner(
@@ -165,7 +183,6 @@ def test_dlq_fail_reprocess_cycle(spark, ndjson_dir, tmp_path, monkeypatch):
         str(tmp_path / "state"),
         str(tmp_path / "out"),
         batch_size=5,
-        dlq_dir=str(tmp_path / "dlq"),
     )
     # 4 current-date files + 1 missing = one full batch of 5 that fails
     listing = _listing(
@@ -174,23 +191,25 @@ def test_dlq_fail_reprocess_cycle(spark, ndjson_dir, tmp_path, monkeypatch):
     res = runner.run(listing, today="2026-08-12")
     assert res.manifests_created == 1
     assert res.manifests_failed == 1
-    entries = runner.dlq_entries()
+    entries = _dead_letters(runner)
     assert len(entries) == 1
     assert missing in entries[0]["file_paths"]
-    assert entries[0]["attempts"] == pl.MAX_RETRIES + 1
+    assert len(calls) == pl.MAX_RETRIES + 1
+    # the exception line closes the traceback: the stored tail names the path
+    assert missing in entries[0]["error_message"]
     st = {r["file_key"]: r["status"] for r in runner.tracker.state().collect()}
     assert all(s.startswith("failed#") for s in st.values())
     mrow = runner.manifest_store.manifests().collect()
     assert len(mrow) == 1 and mrow[0]["status"] == "failed"
 
-    # repair the input, drain the DLQ
+    # repair the input, re-drive the dead letter
     with open(missing, "w") as f:
         for j in range(20):
             f.write(_json.dumps({"id": f"fix_{j}", "v": j}) + "\n")
     res2 = runner.reprocess_failed()
     assert res2.manifests_succeeded == 1
     assert res2.records_written == 5 * 20
-    assert runner.dlq_entries() == []
+    assert _dead_letters(runner) == []
     st = {r["file_key"]: r["status"] for r in runner.tracker.state().collect()}
     assert all(s.startswith("completed#") for s in st.values())
     assert runner.manifest_store.manifests().collect()[0]["status"] == "completed"
@@ -246,9 +265,9 @@ def test_driver_lock_one_winner_no_double_processing(
 def test_circuit_breaker_trips_parks_and_resumes(spark, tmp_path, monkeypatch):
     """ST7 circuit breaker: 3 consecutive manifest failures trip the
     breaker; the rest of the queue parks untouched (status ``created``,
-    no DLQ doc, no failed flip); the tripped state survives a driver
-    restart; manual reset + resume_pending_manifests() re-drives the
-    parked queue."""
+    no failed flip); the tripped state survives a driver restart; manual
+    reset + resume_pending_manifests() re-drives the parked queue and
+    reprocess_failed() the failed one."""
     import json as _json
 
     import high_throughput_etl_pipeline_spark.pipeline as pl
@@ -265,7 +284,6 @@ def test_circuit_breaker_trips_parks_and_resumes(spark, tmp_path, monkeypatch):
         str(tmp_path / "state"),
         str(tmp_path / "out"),
         batch_size=1,
-        dlq_dir=str(tmp_path / "dlq"),
     )
     res = runner.run(
         _listing(spark, [(p, 3.5) for p in missing]), today="2026-08-12"
@@ -274,7 +292,7 @@ def test_circuit_breaker_trips_parks_and_resumes(spark, tmp_path, monkeypatch):
     assert res.manifests_failed == 3  # trip point
     assert res.manifests_skipped == 2  # parked, not failed
     assert res.breaker_tripped
-    assert len(runner.dlq_entries()) == 3
+    assert len(_dead_letters(runner)) == 3
     statuses = sorted(
         r["status"] for r in runner.manifest_store.manifests().collect()
     )
@@ -286,7 +304,6 @@ def test_circuit_breaker_trips_parks_and_resumes(spark, tmp_path, monkeypatch):
         str(tmp_path / "state"),
         str(tmp_path / "out"),
         batch_size=1,
-        dlq_dir=str(tmp_path / "dlq"),
     )
     assert not runner2.breaker.allow()
     # while tripped, resume is a no-op: everything skips again
@@ -303,10 +320,10 @@ def test_circuit_breaker_trips_parks_and_resumes(spark, tmp_path, monkeypatch):
     assert res2.manifests_succeeded == 2
     assert res2.records_written == 2 * 10
     assert not res2.breaker_tripped
-    # the 3 pre-trip failures still drain through the DLQ path
+    # the 3 pre-trip failures are re-driven from their state rows
     res3 = runner2.reprocess_failed()
     assert res3.manifests_succeeded == 3
-    assert runner2.dlq_entries() == []
+    assert _dead_letters(runner2) == []
     final = sorted(
         r["status"] for r in runner2.manifest_store.manifests().collect()
     )
@@ -315,17 +332,19 @@ def test_circuit_breaker_trips_parks_and_resumes(spark, tmp_path, monkeypatch):
 
 def _recorded_runner(spark, tmp_path, monkeypatch, fail: bool):
     """A runner whose ``process_manifest`` only sleeps (or raises) and
-    records how many calls overlap, over 5 one-file manifests."""
+    records how many calls it got and how many overlap, over 5 one-file
+    manifests."""
     import threading
     import time as _time
 
     import high_throughput_etl_pipeline_spark.pipeline as pl
 
     monkeypatch.setattr(pl, "BACKOFF_SECONDS", 0.01)
-    guard, seen = threading.Lock(), {"now": 0, "peak": 0}
+    guard, seen = threading.Lock(), {"now": 0, "peak": 0, "calls": 0}
 
     def recorder(spark, paths, output_dir, **kwargs):
         with guard:
+            seen["calls"] += 1
             seen["now"] += 1
             seen["peak"] = max(seen["peak"], seen["now"])
         try:
@@ -370,6 +389,35 @@ def test_dispatch_in_flight_bounded_by_breaker_budget(
     assert res.manifests_failed == threshold - 1
     assert res.manifests_skipped == 5 - (threshold - 1)
     assert res.breaker_tripped
+
+
+def test_reprocess_with_broken_inputs_trips_the_breaker(
+    spark, tmp_path, monkeypatch
+):
+    """Re-driving dead letters while the inputs are still broken is
+    counted on the breaker like a run: over more failed manifests than
+    the threshold, exactly ``threshold`` are tried and fail again, the
+    breaker trips, and the rest stay ``failed``, counted as skipped."""
+    import high_throughput_etl_pipeline_spark.pipeline as pl
+
+    runner, listing, seen = _recorded_runner(
+        spark, tmp_path, monkeypatch, fail=True
+    )
+    threshold = runner.breaker.threshold
+    runner.run(listing, today="2026-08-12")
+    runner.breaker.reset()
+    runner.resume_pending_manifests()
+    assert len(_dead_letters(runner)) == 5 > threshold
+
+    runner.breaker.reset()
+    seen["calls"] = 0
+    res = runner.reprocess_failed()
+    assert res.manifests_failed == threshold
+    assert res.manifests_skipped == 5 - threshold
+    assert res.manifests_succeeded == 0
+    assert res.breaker_tripped
+    assert seen["calls"] == threshold * (pl.MAX_RETRIES + 1)
+    assert len(_dead_letters(runner)) == 5
 
 
 def test_concurrent_manifests_append_one_date_exactly_once(
