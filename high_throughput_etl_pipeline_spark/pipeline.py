@@ -202,7 +202,8 @@ class PipelineRunner:
         )
         # reference LOCK# semantics: one live driver per state table —
         # a second attach fails fast instead of interleaving Parquet
-        # writes (state/lock.py); expired locks are stolen (crash safety)
+        # writes; a kernel file lock, freed when its holder dies
+        # (state/lock.py)
         self.lock = DriverLock(state_path + "_lock.json")
 
     def run(
@@ -214,9 +215,11 @@ class PipelineRunner:
     ) -> RunResult:
         """One full pipeline pass over a file listing
         (columns: file_path, file_size_mb).  Holds the driver lock for
-        the duration: a concurrent ``run()`` on the same state path
-        raises :class:`~...state.lock.LockHeldError` (reference LOCK#
-        rows — no two builders interleave state writes)."""
+        the duration: a ``run()`` on the same state path from another
+        runner or process raises :class:`~...state.lock.LockHeldError`
+        before any state write (reference LOCK# rows — no two builders
+        interleave state writes).  The lock has no expiry; it is freed
+        when the run returns or its process dies."""
         with self.lock.hold():
             return self._run_locked(file_listing, today, flush_orphans, schema)
 

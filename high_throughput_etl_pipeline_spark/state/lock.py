@@ -1,34 +1,27 @@
-"""Driver lock — multi-driver claim serialization (reference ``LOCK#``
+"""Driver lock: one live driver per state table (the reference's ``LOCK#``
 rows, lambda_manifest_builder.py:1218-1229; DEVELOPER_GUIDE.md:154-163).
 
-The reference serializes concurrent manifest builders with a DynamoDB
-``LOCK#`` row: conditional-put to acquire, TTL so a crashed holder's lock
-expires instead of deadlocking the pipeline.  The engine's state tables
-are plain Parquet (no multi-writer transaction — tracker.py header), so
-the lock is the piece that makes the single-driver assumption SAFE
-rather than implicit: a second driver attaching to the same state path
-fails fast at acquire instead of silently interleaving claim writes.
+The state tables are plain Parquet with no multi-writer transaction
+(tracker.py header), so a second driver attaching to a live state path
+must fail fast instead of interleaving partition rewrites.  The lock is a
+non-blocking exclusive ``flock`` on the lock file: the kernel keeps one
+holder and frees the lock when :meth:`DriverLock.release` closes the
+descriptor or the holder's process dies.  The reference's lock row needs
+a TTL because a Lambda cannot hold a lock past a crash; a kernel lock
+dies with its holder, so there is no expiry, no steal and no stale state.
 
-Mechanism: write the complete lock document to a private temp file, then
-``os.link`` it to the lock path — an atomic create-if-absent that
-publishes the full document in one step (object stores with
-preconditions would use if-none-match the same way).  A competitor can
-therefore never observe a half-written document and mistake a live lock
-for a stale one.  The document records owner + expiry; a later acquirer
-may STEAL only an expired lock (crashed-driver recovery, same semantics
-as the reference's TTL'd lock row), and release re-verifies ownership by
-renaming the lock away before deleting, so it can never clobber a
-stealer's fresh lock.  On a lakehouse deployment the equivalent is a
-Delta/Iceberg conditional commit; the API here is the part that stays.
+The file is never unlinked: were a holder to unlink it and then release,
+a process that had already opened the old inode could lock it while a
+third locked the new file, and both would hold the lock.  Drivers on
+several hosts need a shared file system that honours ``flock``.
 """
 
 from __future__ import annotations
 
-import json
+import fcntl
 import os
-import time
-import uuid
-from contextlib import contextmanager
+import socket
+from contextlib import contextmanager, suppress
 
 
 class LockHeldError(RuntimeError):
@@ -36,176 +29,36 @@ class LockHeldError(RuntimeError):
 
 
 class DriverLock:
-    def __init__(
-        self,
-        path: str,
-        owner: str | None = None,
-        ttl_seconds: float = 3600.0,
-    ):
+    def __init__(self, path: str):
         self.path = path
-        self.owner = owner or f"driver-{uuid.uuid4().hex[:12]}"
-        self.ttl_seconds = ttl_seconds
-
-    def holder(self) -> dict | None:
-        """The current lock document, or None when the path is ABSENT.
-
-        A present-but-unparseable doc (torn disk write outside the
-        atomic-link protocol, manual tampering) returns a sentinel
-        ``{"corrupt": True, ...}`` rather than None: "absent" and
-        "present but garbage" must stay distinguishable, because the
-        steal path removes only PRESENT docs — collapsing corrupt to
-        None made a corrupt doc unstealable and acquire() raise
-        LockHeldError forever, where every other failure self-heals."""
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-        except (json.JSONDecodeError, UnicodeDecodeError):
-            return {"corrupt": True, "owner": None, "expires_at": 0.0}
-
-    def _expired(self, doc: dict) -> bool:
-        try:
-            return time.time() >= float(doc.get("expires_at", 0))
-        except (TypeError, ValueError):
-            # a doc whose expiry cannot be read is never live
-            return True
+        self._fd: int | None = None
 
     def acquire(self) -> None:
-        """Take the lock or raise :class:`LockHeldError`.
-
-        An expired lock (holder crashed without releasing) is stolen:
-        the stale document is removed and acquisition retried once —
-        the two stealers then race on the atomic create and exactly one
-        wins.
-        """
-        doc = json.dumps(
-            {
-                "owner": self.owner,
-                "acquired_at": time.time(),
-                "expires_at": time.time() + self.ttl_seconds,
-            }
-        )
+        """Take the lock, held until :meth:`release` or process exit, or
+        raise :class:`LockHeldError` at once."""
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = f"{self.path}.{self.owner}.tmp"
-        with open(tmp, "w") as f:
-            f.write(doc)
-            f.flush()
-            os.fsync(f.fileno())
+        fd = os.open(self.path, os.O_RDWR | os.O_CREAT, 0o644)
         try:
-            for _ in range(4):
-                try:
-                    # atomic create-if-absent publishing the COMPLETE doc:
-                    # no competitor can ever read a half-written lock file
-                    os.link(tmp, self.path)
-                    return
-                except FileExistsError:
-                    held = self.holder()
-                    if held is not None and not self._expired(held):
-                        raise LockHeldError(
-                            f"state lock held by {held.get('owner')!r} until "
-                            f"{held.get('expires_at')}; a second driver must "
-                            "not attach to a live state table"
-                        )
-                    self._steal_expired()
-            raise LockHeldError("lost the steal race for an expired lock")
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
-
-    @contextmanager
-    def _remove_mutex(self):
-        """Serialize every ``os.remove`` of the lock path.
-
-        The lock file's only transitions are absent→complete-doc (atomic
-        ``os.link``, fails when present) and complete-doc→absent (``remove``).
-        Removing is the dangerous half: a bare remove lets two stealers both
-        win (A removes the expired doc and links; B's remove then deletes A's
-        FRESH lock and links too).  Holding this side-mutex around
-        re-verify + remove means the doc inspected is the doc removed.
-
-        The mutex is a kernel ``flock`` on a sidecar file that is NEVER
-        unlinked (a stable inode is what makes two openers contend on the
-        same lock).  flock releases automatically when the holder dies,
-        so there is no stale-mutex state and no clear-the-stale-file
-        step — the mtime-based clearing this replaces was a TOCTOU: a
-        process acting on an old stat could remove a competitor's FRESH
-        mutex and re-open the double-steal window.  Yields True when the
-        mutex was won, False when a competitor holds it (caller backs
-        off and retries)."""
-        import fcntl
-
-        mutex = f"{self.path}.rm-mutex"
-        fd = os.open(mutex, os.O_CREAT | os.O_WRONLY, 0o644)
-        try:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                time.sleep(0.005)
-                yield False
-                return
-            try:
-                yield True
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-        finally:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError as exc:
+            holder = os.read(fd, 256).decode(errors="replace").strip()
             os.close(fd)
-
-    def _steal_expired(self) -> None:
-        """Remove the lock file ONLY if it still holds an expired document,
-        re-verified under the remove-mutex so no competitor's fresh lock can
-        slip in between the check and the remove."""
-        with self._remove_mutex() as won:
-            if not won:
-                return  # another stealer is mid-steal; retry the create
-            held = self.holder()
-            # Remove ONLY a present-and-expired document.  While the mutex
-            # is held no competitor can remove, so the expired doc we just
-            # read still occupies the path and no fresh ``os.link`` can
-            # land before our remove.  When ``held is None`` a competitor
-            # already removed the expired doc and may be mid-link: removing
-            # "nothing" here would race that link and delete the
-            # competitor's FRESH lock (the double-steal) — skip and retry
-            # the create instead; if the competitor won, the next loop
-            # iteration sees a live document and raises LockHeldError.
-            if held is not None and self._expired(held):
-                try:
-                    os.remove(self.path)
-                except FileNotFoundError:
-                    pass
+            if not isinstance(exc, BlockingIOError):
+                raise
+            raise LockHeldError(
+                f"state lock {self.path} held by {holder or 'unknown'!r}; a "
+                "second driver must not attach to a live state table"
+            ) from None
+        self._fd = fd
+        with suppress(OSError):  # the owner line only names the holder
+            os.ftruncate(fd, 0)
+            os.write(fd, f"{socket.gethostname()} pid {os.getpid()}\n".encode())
 
     def release(self) -> None:
-        """Release only our own lock (never clobber a stealer's).
-
-        Ownership is re-verified under the remove-mutex: while held, no
-        stealer can swap the doc between our check and our remove, so a
-        late release by a crashed-and-recovered owner whose expired lock
-        was already stolen is a no-op instead of deleting the stealer's
-        fresh lock.
-
-        Backs off exponentially on mutex contention and RAISES after
-        exhausting retries — silently returning would leak the lock until
-        TTL expiry with no signal to the operator."""
-        delay = 0.002
-        for _ in range(20):
-            with self._remove_mutex() as won:
-                if not won:
-                    time.sleep(delay)
-                    delay = min(delay * 2, 0.25)
-                    continue
-                held = self.holder()
-                if held is not None and held.get("owner") == self.owner:
-                    try:
-                        os.remove(self.path)
-                    except FileNotFoundError:
-                        pass
-                return
-        raise LockHeldError(
-            f"release(): could not win the remove-mutex for {self.path}; "
-            "lock left in place (it will expire at its TTL)"
-        )
+        """Drop the lock; the file stays in place."""
+        fd, self._fd = self._fd, None
+        if fd is not None:
+            os.close(fd)
 
     @contextmanager
     def hold(self):

@@ -91,8 +91,8 @@ class ManifestStore:
 
         Rows are the state rows grouped by ``manifest_path``, limited to
         ``manifests/…`` paths (stream micro-batches claim under
-        ``stream-batch-N`` and are not manifests).  ``batch_id`` is parsed
-        from the path.  ``status`` is the files' base status with
+        ``stream-<id>-batch-N`` and are not manifests).  ``batch_id`` is
+        parsed from the path.  ``status`` is the files' base status with
         ``manifested`` shown as ``created``; a manifest's files flip
         together, and should they ever disagree ``max`` ranks
         ``manifested`` above ``failed`` above ``completed``, so a manifest

@@ -249,6 +249,8 @@ class FileStateTracker:
         error_message: str | None = None,
     ) -> int:
         """Batch flip all files of a manifest, preserving shard suffix.
+        Each flipped row's error becomes ``error_message``, so a flip
+        without one (a re-driven manifest that succeeds) clears it.
 
         Parity: lambda_batch_status_updater.py:53-204 (manifested#N →
         completed#N / failed#N after the Spark job finishes).
@@ -275,8 +277,9 @@ class FileStateTracker:
             )
             .withColumn(
                 "error_message",
-                F.when(hit & F.lit(error_message is not None),
-                       F.lit(error_message)).otherwise(F.col("error_message")),
+                F.when(hit, F.lit(error_message).cast("string")).otherwise(
+                    F.col("error_message")
+                ),
             )
         )
         dates = (

@@ -25,7 +25,6 @@ non-destructive, superseded snapshots retire by deferred retention.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -95,9 +94,7 @@ def start_cusum_stream(
 ):
     """Maintain the live (group, day) count series from a streaming
     frame."""
-    stream_id = hashlib.sha1(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    stream_id = _store.stream_id(checkpoint_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         merge_batch(

@@ -22,7 +22,6 @@ the micro-batch itself; drift evaluation never rescans history.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -104,9 +103,7 @@ def start_drift_stream(
     available_now: bool = False,
 ):
     """Maintain the live bucket-count table from a streaming frame."""
-    stream_id = hashlib.sha1(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    stream_id = _store.stream_id(checkpoint_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         merge_batch(

@@ -41,6 +41,7 @@ from high_throughput_etl_pipeline_spark.operators.batching import (
     MAX_FILES_PER_MANIFEST,
 )
 from high_throughput_etl_pipeline_spark.state.tracker import FileStateTracker
+from high_throughput_etl_pipeline_spark.streaming.store import stream_id
 
 
 def start_ingest_stream(
@@ -68,15 +69,19 @@ def start_ingest_stream(
     )
 
     tracker = FileStateTracker(spark, state_path) if state_path else None
+    # claims are named per checkpoint: streams sharing one state table
+    # number their batches from 0 each, and must not skip each other's
+    claim_prefix = f"stream-{stream_id(checkpoint_dir)}-batch-"
 
     def handle_batch(batch_df, batch_id: int) -> None:
+        claim = f"{claim_prefix}{batch_id}"
         # ST4 idempotency: if a replayed batch was already fully committed
         # (status flip is the LAST step), skip it outright …
         if tracker is not None:
             already = (
                 tracker.state()
                 .filter(
-                    (F.col("manifest_path") == f"stream-batch-{batch_id}")
+                    (F.col("manifest_path") == claim)
                     & F.col("status").startswith("completed")
                 )
                 .limit(1)
@@ -115,10 +120,10 @@ def start_ingest_stream(
                 files.select(
                     "date_prefix",
                     F.col("file_name").alias("file_key"),
-                    F.lit(f"stream-batch-{batch_id}").alias("manifest_path"),
+                    F.lit(claim).alias("manifest_path"),
                 )
             )
-            tracker.update_status_for_manifest(f"stream-batch-{batch_id}", "completed")
+            tracker.update_status_for_manifest(claim, "completed")
 
     writer = shaped.writeStream.option("checkpointLocation", checkpoint_dir)
     writer = writer.foreachBatch(handle_batch)

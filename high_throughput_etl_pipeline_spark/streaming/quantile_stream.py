@@ -30,7 +30,6 @@ data itself, not just the row counts.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -125,9 +124,7 @@ def start_quantile_stream(
     frame.  Restart from the same checkpoint must not double-count:
     replayed batch ids are detected via the published snapshot id and
     skipped (tested by the restart leg of the streaming suite)."""
-    stream_id = hashlib.sha1(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    stream_id = _store.stream_id(checkpoint_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         merge_batch(

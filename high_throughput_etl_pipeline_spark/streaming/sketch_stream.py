@@ -30,7 +30,6 @@ n_rows recount is not, hence the id guard.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -152,9 +151,7 @@ def start_sketch_stream(
     skipped.
     """
 
-    stream_id = hashlib.sha1(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    stream_id = _store.stream_id(checkpoint_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         merge_batch(batch, batch_id, table_path, key_col, ts_col, stream_id)

@@ -207,12 +207,14 @@ def swap(staging: str, out_dir: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def stream_id(checkpoint_dir: str) -> str:
+    """A stream's identity: a hash of its checkpoint's absolute path."""
+    return hashlib.sha1(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
+
+
 def stamp_stream_id(table_path: str, checkpoint_dir: str, kind: str) -> None:
     """Fence the table to one checkpoint lineage; raise on mismatch."""
-    sid = hashlib.sha1(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
-    stamp_raw_stream_id(table_path, sid, kind)
+    stamp_raw_stream_id(table_path, stream_id(checkpoint_dir), kind)
 
 
 def stamp_raw_stream_id(table_path: str, sid: str, kind: str) -> None:
@@ -244,6 +246,7 @@ __all__ = [
     "already_absorbed",
     "publish",
     "swap",
+    "stream_id",
     "stamp_stream_id",
     "stamp_raw_stream_id",
 ]

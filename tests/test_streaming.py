@@ -123,6 +123,36 @@ def test_stream_replay_after_checkpoint_loss_no_duplicates(spark, tmp_path):
     assert df.select("id").distinct().count() == 6 * 30
 
 
+def test_streams_sharing_a_state_table_keep_their_batches(spark, tmp_path):
+    """Two streams on one state table, each with its own input, output and
+    checkpoint, both number their micro-batches from 0.  Claims are named
+    per checkpoint, so the second stream's batch 0 is not taken for a
+    replay of the first's and skipped."""
+    from high_throughput_etl_pipeline_spark.state.tracker import (
+        FileStateTracker,
+    )
+
+    state = str(tmp_path / "state")
+    for name in ("a", "b"):
+        ind = tmp_path / f"in_{name}"
+        ind.mkdir()
+        with open(ind / f"2026-08-12-{name}.ndjson", "w") as f:
+            for j in range(5):
+                f.write(json.dumps({"id": j, "kind": name}) + "\n")
+        out = str(tmp_path / f"out_{name}")
+        start_ingest_stream(
+            spark, str(ind), out, str(tmp_path / f"ckpt_{name}"),
+            schema=SCHEMA, state_path=state,
+        ).awaitTermination(120)
+        assert spark.read.parquet(out).count() == 5
+    st = {
+        r["file_key"]: r["status"]
+        for r in FileStateTracker(spark, state).state().collect()
+    }
+    assert set(st) == {"2026-08-12-a.ndjson", "2026-08-12-b.ndjson"}
+    assert all(s.startswith("completed#") for s in st.values())
+
+
 def test_windowed_counts_stream_and_batch_agree(spark, tmp_path):
     """ST2/ST3: event-time tumbling windows with a watermark; the batch
     run of the same plan is the oracle for the streamed one."""

@@ -1,12 +1,13 @@
-"""Per-job/stage profile of one registered query (guide §1 empirical loop).
+"""Per-job profile of one registered query (guide §1 empirical loop).
 
     python tools/profile_query.py <query_name> [sf_dir]
 
 Runs the query once untimed at sf0.001 (codegen warm-up), once timed at
 ``sf_dir`` (default sf0.1), then prints every Spark job the timed run
-launched with its wall time, stage count, task count, and shuffle
-read/write bytes — pulled from the live UI REST API, which is the
-headless stand-in for the Stages tab.  Ends with a JSON summary line.
+launched with its wall time and its shuffle and spill bytes, read from
+the live UI REST API by ``perfbench.trace.job_stats``.  Ends with a JSON
+summary line; its driver gap is wall time minus the time at least one
+job was running (overlapping jobs counted once).
 """
 
 from __future__ import annotations
@@ -15,76 +16,40 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from high_throughput_etl_pipeline_spark.queries import QUERIES
 from high_throughput_etl_pipeline_spark.session import get_spark
-
-
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
+from perfbench.trace import busy_time, job_stats
 
 
 def main() -> None:
     name = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     spark = get_spark("profile-query")
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     fn = QUERIES[name]
     try:
         fn(spark, "/root/testdata/sf0.001").count()  # warm codegen
     except Exception as exc:
         print(f"# warm-up failed: {exc}", file=sys.stderr)
 
-    jobs_before = {j["jobId"] for j in _get(f"{ui}/api/v1/applications/{app_id}/jobs")}
-    spark.sparkContext.setJobDescription(f"profile:{name}")
+    jobs_before = set(job_stats(sc))
+    sc.setJobDescription(f"profile:{name}")
     t0 = time.time()
     n = fn(spark, sf_dir).count()
     wall = time.time() - t0
-    spark.sparkContext.setJobDescription(None)
+    sc.setJobDescription(None)
 
-    jobs = [
-        j
-        for j in _get(f"{ui}/api/v1/applications/{app_id}/jobs")
-        if j["jobId"] not in jobs_before
-    ]
-    jobs.sort(key=lambda j: j["jobId"])
-    stages = {
-        s["stageId"]: s
-        for s in _get(f"{ui}/api/v1/applications/{app_id}/stages?status=complete")
-    }
-    total_job_sec = 0.0
-    rows = []
-    for j in jobs:
-        t_sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-        t_end = time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-        # sub-second precision from the GMT strings' milliseconds
-        ms_sub = float(j["submissionTime"][19:23] or 0)
-        ms_end = float(j["completionTime"][19:23] or 0)
-        dur = (time.mktime(t_end) + ms_end) - (time.mktime(t_sub) + ms_sub)
-        total_job_sec += dur
-        srd = swr = tasks = 0
-        names = []
-        for sid in j["stageIds"]:
-            s = stages.get(sid)
-            if not s:
-                continue
-            srd += s.get("shuffleReadBytes", 0)
-            swr += s.get("shuffleWriteBytes", 0)
-            tasks += s.get("numCompleteTasks", 0)
-            names.append(f"{sid}:{s.get('name','')[:48]}")
-        rows.append((j["jobId"], dur, len(j["stageIds"]), tasks, srd, swr, names))
+    jobs = {i: j for i, j in sorted(job_stats(sc).items()) if i not in jobs_before}
+    for i, j in jobs.items():
         print(
-            f"job {j['jobId']:>4}  {dur:7.3f}s  stages={len(j['stageIds']):>2} "
-            f"tasks={tasks:>4}  shufR={srd/1e6:8.2f}MB shufW={swr/1e6:8.2f}MB  "
-            f"{'; '.join(names[:3])}"
+            f"job {i:>4}  {j['end'] - j['start']:7.3f}s  "
+            f"shuffle={j['shuffle'] / 1e6:8.2f}MB  spill={j['spill'] / 1e6:8.2f}MB"
         )
-    gap = wall - total_job_sec
+    spans = [(j["start"], j["end"]) for j in jobs.values()]
     print(
         json.dumps(
             {
@@ -92,8 +57,8 @@ def main() -> None:
                 "wall_sec": round(wall, 3),
                 "rows": n,
                 "n_jobs": len(jobs),
-                "sum_job_sec": round(total_job_sec, 3),
-                "driver_gap_sec": round(gap, 3),
+                "sum_job_sec": round(sum(hi - lo for lo, hi in spans), 3),
+                "driver_gap_sec": round(wall - busy_time(spans), 3),
             }
         )
     )
